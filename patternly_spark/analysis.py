@@ -5,7 +5,7 @@ Reference flow (``examples/SleepAnalysis.ipynb`` cells 3-4,
 ``examples/Satellite Analysis.ipynb`` cell 12): simulate representative
 sequences per PFSA -> pairwise Lsmash distances -> external ``bin/embed``
 -> PCA to 2-D -> DBSCAN merge.  Spark-first shape: the simulation and
-llk featurization are distributed (``simulate_df`` + ``score_sequences``
+llk featurization are distributed (``simulate_df`` + ``score_matrix``
 over the broadcast base library, O(models x reps) narrow work); the
 embed/PCA/merge run driver-side on the k x d matrix of per-model mean
 features, where k = library size (tens at most) — shipping a k x k
@@ -22,7 +22,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from patternly_spark.detection import _base_models
-from patternly_spark.pfsa.llk import score_sequences
+from patternly_spark.pfsa.llk import score_matrix
 from patternly_spark.pfsa.model import PFSA
 from patternly_spark.pfsa.simulate import simulate_df
 
@@ -42,14 +42,11 @@ def pfsa_library_features(
     per_model = []
     for m in library:
         seqs = simulate_df(spark, m, data_len=seq_len, num_repeats=n_reps, seed=seed + m.pfsa_id)
-        scored = score_sequences(seqs, base)
-        rows = (
-            scored.groupBy("pfsa_id")
-            .agg(F.avg(F.when(F.col("llk") != float("inf"), F.col("llk"))).alias("mean_llk"))
-            .orderBy("pfsa_id")
-            .collect()
-        )
-        per_model.append([float(r["mean_llk"]) for r in rows])
+        llk = F.col("llk")
+        means = score_matrix(seqs, base, keep=()).agg(
+            *[F.avg(F.when(llk[j] != float("inf"), llk[j])) for j in range(len(base))]
+        ).first()
+        per_model.append([float(v) for v in means])
     return np.asarray(per_model)
 
 

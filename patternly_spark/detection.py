@@ -15,9 +15,10 @@ fit:      quantize (codegen column exprs) -> SLD featurization (score vs a
           (seeded) -> frequency relabel -> per-cluster GenESeSS via
           applyInPandas -> iterative cluster reduction -> per-cluster
           llk stats (stddev_samp == ddof=1).
-predict:  one mapInPandas pass scoring every sequence under the broadcast
-          library, then a single groupBy(seq_id) for the ALL-above-bound
-          anomaly reduction + argmin closest-match.  One shuffle total.
+predict:  one mapInArrow pass scoring every sequence under the library in
+          the task closure (``llk array<double>`` per sequence), then
+          column expressions over that array for the ALL-above-bound
+          anomaly reduction + argmin closest-match.  No shuffle.
 
 Consciously fixed reference bugs (SURVEY §7.4): correct Tarjan SCC count
 (vs _utils.py:157-160 whole-stack pop), per-refit library rebuild (vs
@@ -33,7 +34,7 @@ import os
 from typing import Callable
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from patternly_spark.functions.quantize import (
@@ -44,7 +45,7 @@ from patternly_spark.functions.quantize import (
 )
 from patternly_spark.functions.windowing import split_stream, windows_to_sequences
 from patternly_spark.pfsa.genesess import _tarjan_scc, fit_cluster_pfsas, genesess
-from patternly_spark.pfsa.llk import llk_batch, score_sequences
+from patternly_spark.pfsa.llk import llk_batch, score_matrix
 from patternly_spark.pfsa.model import PFSA
 from patternly_spark.pfsa.simulate import simulate
 
@@ -90,6 +91,12 @@ def _relabel_by_frequency(labels_df: DataFrame) -> tuple[DataFrame, list[int], i
     out = labels_df.withColumn("cluster", map_expr[F.col("cluster")].cast("int"))
     counts_desc = sorted(counts.tolist(), reverse=True)
     return out, counts_desc, n
+
+
+def _argmin(col: str):
+    """0-based position of an array's first minimum (ties -> lowest
+    position, i.e. lowest pfsa_id in a library ordered by id)."""
+    return (F.array_position(col, F.array_min(col)) - 1).cast("int")
 
 
 class AnomalyDetection:
@@ -196,19 +203,9 @@ class AnomalyDetection:
         if self._sld_cache is not None:
             return self._sld_cache
         base = _base_models(self.alphabet_size or 2)
-        scored = score_sequences(seq_df, base)
-        feats = (
-            scored.groupBy("seq_id")
-            .agg(
-                F.array_sort(F.collect_list(F.struct("pfsa_id", "llk"))).alias("pairs")
-            )
-            .select(
-                "seq_id",
-                F.transform(
-                    "pairs",
-                    lambda p: F.when(p["llk"] == float("inf"), F.lit(1e6)).otherwise(p["llk"]),
-                ).alias("feat"),
-            )
+        feats = score_matrix(seq_df, base).select(
+            "seq_id",
+            F.transform("llk", lambda v: F.when(v == float("inf"), F.lit(1e6)).otherwise(v)).alias("feat"),
         )
         self._sld_cache = feats.persist()
         return self._sld_cache
@@ -271,13 +268,8 @@ class AnomalyDetection:
         """One reduction evaluation (X7): confusion fractions -> self-boost
         -> threshold-0.2 digraph -> SCC count (correct Tarjan)."""
         k = len(library)
-        scored = score_sequences(clustered, library)
-        with_cluster = scored.join(clustered.select("seq_id", "cluster"), "seq_id")
-        w = Window.partitionBy("seq_id").orderBy("llk", "pfsa_id")
-        best = (
-            with_cluster.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("seq_id", "cluster", F.col("pfsa_id").alias("best_pfsa"))
+        best = score_matrix(clustered, library, keep=("cluster",)).select(
+            "cluster", _argmin("llk").alias("best_pfsa")
         )
         conf_rows = best.groupBy("cluster", "best_pfsa").count().collect()
         mat = np.zeros((k, k))
@@ -333,20 +325,21 @@ class AnomalyDetection:
         self.library = library
 
         # A1: per-cluster llk mean/std over the cluster's own PFSA
-        scored = score_sequences(clustered, library)
-        own = scored.join(clustered.select("seq_id", "cluster"), "seq_id").filter(
-            F.col("pfsa_id") == F.col("cluster")
+        own = (
+            score_matrix(clustered, library, keep=("cluster",))
+            .filter(F.col("cluster").between(0, self.n_clusters - 1))
+            .select("cluster", F.col("llk")[F.col("cluster")].alias("llk"))
         )
         stats = (
-            own.groupBy("pfsa_id")
+            own.groupBy("cluster")
             .agg(F.avg("llk").alias("mean"), F.stddev_samp("llk").alias("std"))
             .collect()
         )
         means = np.zeros(self.n_clusters)
         stds = np.zeros(self.n_clusters)
         for r in stats:
-            means[int(r["pfsa_id"])] = r["mean"]
-            stds[int(r["pfsa_id"])] = r["std"] if r["std"] is not None else 0.0
+            means[int(r["cluster"])] = r["mean"]
+            stds[int(r["cluster"])] = r["std"] if r["std"] is not None else 0.0
         self.pfsa_llk_means = means
         self.pfsa_llk_stds = stds
         self.quantized_df = clustered.select("seq_id", "symbols", "cluster").persist()
@@ -358,9 +351,10 @@ class AnomalyDetection:
     def predict(self, df: DataFrame | None = None) -> DataFrame:
         """-> (seq_id, anomaly boolean, closest_match int).
 
-        Plan: mapInPandas llk scoring (library in closure, no shuffle) +
-        one groupBy(seq_id) for the ALL-above-bound reduction (A6) and
-        argmin closest match (A3).
+        Plan: one mapInArrow llk scoring pass (library in closure) and
+        column expressions over each sequence's llk array: the
+        ALL-above-bound reduction (A6) and the argmin closest match (A3).
+        No shuffle.
         """
         if not self.fitted:
             raise ValueError("Model has not been fit yet.")
@@ -371,26 +365,14 @@ class AnomalyDetection:
         else:
             seq_df = self._quantize(df)
 
-        bounds = {
-            int(m.pfsa_id): float(self.pfsa_llk_means[i] + self.pfsa_llk_stds[i] * self.anomaly_sensitivity)
-            for i, m in enumerate(self.library)
-        }
-        scored = score_sequences(seq_df, self.library)
-        bound_expr = F.create_map(*[F.lit(x) for kv in bounds.items() for x in kv])
-        flagged = scored.withColumn("above", F.col("llk") > bound_expr[F.col("pfsa_id")])
-        out = (
-            flagged.groupBy("seq_id")
-            .agg(
-                F.min(F.when(F.col("above"), F.lit(1)).otherwise(F.lit(0))).alias("all_above"),
-                F.min_by("pfsa_id", F.struct("llk", "pfsa_id")).alias("closest_match"),
-            )
-            .select(
-                "seq_id",
-                (F.col("all_above") == 1).alias("anomaly"),
-                F.col("closest_match").cast("int"),
-            )
+        bounds = self.pfsa_llk_means + self.pfsa_llk_stds * self.anomaly_sensitivity
+        above = F.zip_with("llk", F.array(*map(F.lit, bounds.tolist())), lambda llk, bound: llk > bound)
+        ids = F.array(*[F.lit(int(m.pfsa_id)) for m in self.library])
+        return score_matrix(seq_df, self.library).select(
+            "seq_id",
+            F.forall(above, lambda a: a).alias("anomaly"),
+            ids[_argmin("llk")].alias("closest_match"),
         )
-        return out
 
     def print_PFSAs(self) -> None:
         """Print each cluster PFSA (parity: AnomalyDetection.print_PFSAs,

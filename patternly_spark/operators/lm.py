@@ -57,19 +57,19 @@ def _pin_corpus(df: DataFrame) -> DataFrame:
     executor memory the way the round-10 graph pins did before
     DISK_ONLY.  ``SPARK_GRAFT_LM_PIN=disk`` forces DISK_ONLY (the
     zero-memory-pressure envelope used by the scale rehearsals);
-    ``=deser`` restores the old default for A/B.  Values are unaffected
-    — storage level changes where cached bytes live, not what they
-    are."""
+    ``=deser`` restores the old default for A/B; any other value raises
+    ``ValueError``.  Values are unaffected — storage level changes where
+    cached bytes live, not what they are."""
     import os
 
     from pyspark import StorageLevel
 
+    levels = {"ser": StorageLevel.MEMORY_AND_DISK, "disk": StorageLevel.DISK_ONLY,
+              "deser": StorageLevel.MEMORY_AND_DISK_DESER}
     mode = os.environ.get("SPARK_GRAFT_LM_PIN", "ser")
-    level = {
-        "disk": StorageLevel.DISK_ONLY,
-        "deser": StorageLevel.MEMORY_AND_DISK_DESER,
-    }.get(mode, StorageLevel.MEMORY_AND_DISK)
-    return df.persist(level)
+    if mode not in levels:
+        raise ValueError(f"SPARK_GRAFT_LM_PIN={mode!r}: expected one of {sorted(levels)}")
+    return df.persist(levels[mode])
 
 
 def _doc_bigrams(

@@ -91,13 +91,6 @@ class PFSA:
             self._stationary = p / p.sum()
         return self._stationary
 
-    def gamma(self, sigma: int) -> np.ndarray:
-        """Gamma_sigma |Q|x|Q| matrix (tex/ms.tex Gamma-expression)."""
-        g = np.zeros((self.n_states, self.n_states))
-        for q in range(self.n_states):
-            g[q, self.connx[q, sigma]] = self.pitilde[q, sigma]
-        return g
-
     # ---- Spark row conversion -------------------------------------------
     def to_row(self) -> Row:
         return Row(

@@ -12,8 +12,14 @@ summary records ``errors`` (count) and ``error_texts``; a loud FAILED
 marker is printed and the process exits nonzero if any rep errored
 (override with --allow-errors).
 
+The output JSON carries ``"schema": SCHEMA``.  Under schema 2, a
+query's ``n`` counts ALL its reps, errored ones included, and ``n_ok``
+counts the clean ones the statistics are taken over (schema 1 files,
+which have no marker, counted only what they treated as clean in ``n``).
+
 Usage: python scripts/aggregate_repeats.py <glob> [out.json] [--allow-errors]
-       e.g. python scripts/aggregate_repeats.py '/root/repo/sf100_r12_rep*.json' BENCH_scale_sf100_r12.json
+       e.g. python scripts/aggregate_repeats.py 'sf100_r12_rep*.json' BENCH_scale_sf100_r12.json
+Run without a glob, it prints this usage and exits 2.
 """
 
 from __future__ import annotations
@@ -23,10 +29,16 @@ import json
 import statistics
 import sys
 
+SCHEMA = 2
+USAGE = "usage: python scripts/aggregate_repeats.py <glob> [out.json] [--allow-errors]"
+
 
 def main() -> None:
     args = [a for a in sys.argv[1:] if a != "--allow-errors"]
     allow_errors = "--allow-errors" in sys.argv[1:]
+    if not args:
+        print(USAGE, file=sys.stderr)
+        sys.exit(2)
     pattern = args[0]
     out = args[1] if len(args) > 1 else None
     per_query: dict[str, list[dict]] = {}
@@ -94,6 +106,7 @@ def main() -> None:
         with open(out, "w") as fh:
             json.dump(
                 {
+                    "schema": SCHEMA,
                     "pattern": pattern,
                     "files": files,
                     "any_errors": any_errors,

@@ -488,3 +488,49 @@ def test_fit_complex_cutpoints_distributed_mode_matches_exact(spark):
     exact = fit_complex_cutpoints(df, "value", n_symbols=4, exact=True)
     dist = fit_complex_cutpoints(df, "value", n_symbols=4, exact="distributed")
     assert dist == exact
+
+
+def test_predict_is_one_narrow_pass_matching_a_driver_replay(spark):
+    """predict: zero exchanges, and its verdict equals the kernel's llk
+    matrix read on the driver (anomaly = every llk above its model's
+    bound, closest_match = argmin with ties to the lowest pfsa_id)."""
+    from patternly_spark.pfsa.llk import llk_matrix, pack
+    from patternly_spark.plans import assert_plan
+
+    train = _seq_df(spark, [(MACHINE_A, 60, 3), (MACHINE_B, 60, 4)])
+    model = AnomalyDetection(spark, n_clusters=2, quantize=False, anomaly_sensitivity=2,
+                             reduce_clusters=False, eps=0.2)
+    model.fit(train)
+    # a duplicate of model 0 appended as pfsa_id 2: every sequence ties
+    # between 0 and 2, and the tie must go to 0
+    twin = PFSA.from_dict(dict(model.library[0].to_dict(), pfsa_id=2))
+    model.library.append(twin)
+    model.pfsa_llk_means = np.append(model.pfsa_llk_means, model.pfsa_llk_means[0])
+    model.pfsa_llk_stds = np.append(model.pfsa_llk_stds, model.pfsa_llk_stds[0])
+
+    test = _seq_df(spark, [(MACHINE_A, 20, 13), (MACHINE_B, 20, 14), (MACHINE_U, 10, 15)], length=150)
+    preds = model.predict(test)
+    assert_plan(preds, max_exchanges=0)
+    got = preds.toPandas().sort_values("seq_id")
+
+    rows = test.orderBy("seq_id").collect()
+    lens = np.array([len(r.symbols) for r in rows])
+    packed = pack(np.concatenate([np.asarray(r.symbols) for r in rows]), lens)
+    llk = llk_matrix(packed, lens, model.library)
+    bounds = model.pfsa_llk_means + model.pfsa_llk_stds * model.anomaly_sensitivity
+    assert got.anomaly.tolist() == (llk > bounds).all(axis=1).tolist()
+    assert got.closest_match.tolist() == llk.argmin(axis=1).tolist()
+    assert 2 not in set(got.closest_match)
+    assert got.anomaly.iloc[40:].all()
+
+
+def test_score_matrix_carries_columns_and_scores_unequal_lengths(spark):
+    from patternly_spark.pfsa.llk import llk_one, score_matrix
+
+    rows = [(0, "a", [0, 1, 1, 0]), (1, "b", [1]), (2, "c", []), (3, "d", [0, 3, 1]), (4, None, [1, 1, 0, 1, 0, 0])]
+    df = spark.createDataFrame(rows, "seq_id long, tag string, symbols array<tinyint>")
+    out = score_matrix(df, [MACHINE_A, MACHINE_C], keep=("seq_id", "tag")).orderBy("seq_id").collect()
+    assert [(r.seq_id, r.tag) for r in out] == [(r[0], r[1]) for r in rows]
+    for r, (_, _, syms) in zip(out, rows):
+        want = [llk_one(syms, m) for m in (MACHINE_A, MACHINE_C)]
+        assert r.llk == pytest.approx(want, rel=1e-12)

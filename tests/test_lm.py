@@ -73,6 +73,27 @@ def test_lm_is_reusable_dataframes(spark, corpus):
     assert a == b
 
 
+@pytest.mark.parametrize("mode", ["ser", "disk", "deser"])
+def test_lm_pin_accepts_known_modes(spark, corpus, monkeypatch, mode):
+    from patternly_spark.operators.lm import _pin_corpus
+
+    monkeypatch.setenv("SPARK_GRAFT_LM_PIN", mode)
+    pinned = _pin_corpus(corpus)
+    assert pinned.count() == 3
+    pinned.unpersist()
+
+
+@pytest.mark.parametrize("mode", ["", "Disk", "memory", "ser "])
+def test_lm_pin_rejects_unknown_mode(spark, corpus, monkeypatch, mode):
+    from patternly_spark.operators.lm import _pin_corpus
+
+    monkeypatch.setenv("SPARK_GRAFT_LM_PIN", mode)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_LM_PIN"):
+        _pin_corpus(corpus)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_LM_PIN"):
+        bigram_lm_scores(corpus)  # the self-scoring path pins the corpus
+
+
 def test_dsir_weights_prefers_target_like_docs(spark):
     from patternly_spark.operators.lm import dsir_weights
 

@@ -15,9 +15,9 @@ pinned elsewhere).
 import math
 
 import numpy as np
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
-from patternly_spark.pfsa.llk import llk_batch, llk_one
+from patternly_spark.pfsa.llk import llk_batch, llk_matrix, llk_one, pack
 from patternly_spark.pfsa.model import PFSA
 from patternly_spark.pfsa.simulate import simulate
 
@@ -141,6 +141,54 @@ def test_llk_separation_property(seed):
     under_g = llk_batch(seqs, G).mean()
     under_h = llk_batch(seqs, H).mean()
     assert under_g < under_h
+
+
+# ---------------------------------------------------------------------------
+# llk_matrix == llk_one for every (sequence, model) pair: random PFSAs of
+# different sizes and alphabets in one library, with zero-probability
+# entries and delta a permutation on some (or all) symbols — an
+# all-permutation machine never leaves a spread distribution, so the
+# dense path runs to the end; sequences of unequal length, empty, and
+# with symbols outside an alphabet (negative, or >= k).
+# ---------------------------------------------------------------------------
+
+@st.composite
+def _random_pfsa(draw):
+    nq = draw(st.integers(1, 5))
+    k = draw(st.integers(2, 4))
+    weights = draw(st.lists(st.sampled_from([0.0, 0.1, 0.5, 1.0, 2.0, 3.7]), min_size=nq * k, max_size=nq * k))
+    pit = np.asarray(weights).reshape(nq, k)
+    pit[pit.sum(axis=1) == 0, 0] = 1.0
+    cnx = np.asarray(draw(st.lists(st.integers(0, nq - 1), min_size=nq * k, max_size=nq * k))).reshape(nq, k)
+    for s in range(k):
+        if draw(st.booleans()):
+            cnx[:, s] = draw(st.permutations(range(nq)))
+    return PFSA(pitilde=pit / pit.sum(axis=1, keepdims=True), connx=cnx)
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    st.lists(_random_pfsa(), min_size=1, max_size=3),
+    st.lists(st.lists(st.integers(-1, 4), max_size=25), min_size=1, max_size=8),
+    st.booleans(),
+)
+# a zero-probability step while the distribution is still spread, with
+# steps after it: the pair must score inf, not nan
+@example([PFSA(pitilde=[[1.0, 0.0], [1.0, 0.0]], connx=[[1, 0], [0, 1]])], [[0, 1, 0], [0, 0]], False)
+def test_llk_matrix_matches_scalar_oracle(models, seqs, one_length):
+    if one_length:
+        seqs = [s[: min(map(len, seqs))] for s in seqs]
+    lens = np.array([len(s) for s in seqs], dtype=np.int64)
+    values = np.array([v for s in seqs for v in s], dtype=np.int8)
+    got = llk_matrix(pack(values, lens), lens, models)
+    assert got.shape == (len(seqs), len(models))
+    for j, m in enumerate(models):
+        want = np.array([llk_one(s, m) for s in seqs])
+        assert np.array_equal(np.isinf(got[:, j]), np.isinf(want))
+        fin = np.isfinite(want)
+        np.testing.assert_allclose(got[fin, j], want[fin], rtol=1e-12, atol=0)
+        # the one-model call is the same kernel
+        assert np.array_equal(llk_batch(seqs, m), got[:, j])
 
 
 # ---------------------------------------------------------------------------

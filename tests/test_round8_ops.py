@@ -609,7 +609,18 @@ def test_bench_compact_line_fits_and_parses():
     d = json.loads(line)
     assert d["n_queries"] == len(timings)
     assert d["value"] == 222.0
-    assert 0 < len(d["queries"]) <= 46
+    # the headline is the computed set (driver-gate queries, budgeted
+    # iterative entries, heavy data-path additions), in that order; a
+    # budget elision may only drop entries from its tail, and says so
+    headline = list(dict.fromkeys(
+        n
+        for n in bench.BENCH_QUERIES[:40] + list(bench.BENCH_BUDGETED) + bench.BENCH_HEADLINE_EXTRA
+        if n in timings
+    ))
+    assert 0 < len(d["queries"]) <= len(headline)
+    assert list(d["queries"]) == headline[: len(d["queries"])]
+    if len(d["queries"]) < len(headline):
+        assert d["queries_elided"] == len(timings) - len(d["queries"])
     # a pathological run with huge regressions still fits (queries give way)
     out["regressions"] = {
         n: {"sec": 9.99, "pin": 1.0} for n in bench.BENCH_QUERIES[:30]
